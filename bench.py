@@ -252,6 +252,7 @@ def main() -> None:
     # Baselines to beat: JOB@90s -> 112.4 s; CEB@0.75h -> 1.615 h
     # (default 181 s / 2.94 h).
     sim: dict[str, float] = {}
+    sim_skipped_reason: str | None = None
     try:
         if os.environ.get("SPARK_GRAFT_SKIP_SIM"):
             raise RuntimeError("sim track skipped via SPARK_GRAFT_SKIP_SIM")
@@ -405,8 +406,8 @@ def main() -> None:
         a = set(rank_cells_by_improvement(npy_pred, wl_dsb.mask, mo, k))
         b = set(rank_cells_by_improvement(mll.pred, wl_dsb.mask, mo, k))
         sim["sim_dsb_mllib_agreement_k32"] = round(len(a & b) / max(len(a), 1), 4)
-    except Exception:  # sim track must never sink the bench line
-        pass
+    except Exception as e:  # sim track must never sink the bench line
+        sim_skipped_reason = f"{type(e).__name__}: {e}"
 
     # headline value = query-engine wall only; the sim_* rows are SOLVER
     # overhead (the reference reports these separately too — BASELINE.md:
@@ -511,6 +512,8 @@ def main() -> None:
     full["headline_host_normalized_s"] = norm
     full["headline_host_normalized_basis"] = "median_rep_ratio"
     full.update(sim)
+    if sim_skipped_reason is not None:
+        full["sim_skipped_reason"] = sim_skipped_reason
     if sim:
         # published reference checkpoints (BASELINE.md) next to our numbers,
         # same keys minus the prefix, so the comparison is self-contained
@@ -652,8 +655,9 @@ def main() -> None:
             with open(full_path, "w") as f:
                 json.dump(full, f, indent=1)
                 f.write("\n")
-        f.write("\n")
     compact.update({k: v for k, v in sim.items() if isinstance(v, (int, float))})
+    if sim_skipped_reason is not None:
+        compact["sim_skipped_reason"] = sim_skipped_reason
     print(json.dumps(compact))
     sys.stdout.flush()
     spark.stop()

@@ -9,6 +9,7 @@ or SQL API against the same names the DuckDB oracle uses.
 from __future__ import annotations
 
 import os
+import warnings
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,12 +70,25 @@ def _track_session(spark: SparkSession, registry: set[int], sid: int) -> None:
     weakref.finalize(spark, registry.discard, sid)
 
 
+_STOP_PROBE_WARNED = False
+
+
 def _session_stopped(spark: SparkSession) -> bool:
     """True when the session's underlying SparkContext has been stopped
-    (``SparkContext.stop()`` nulls the JVM handle)."""
+    (``SparkContext.stop()`` nulls the JVM handle). ``_jsc`` is private
+    PySpark API: if it disappears, every session reads as stopped (its
+    read plans get re-created, never served stale) and one warning says so."""
+    global _STOP_PROBE_WARNED
     try:
         return spark.sparkContext._jsc is None
-    except Exception:  # noqa: BLE001 — any breakage reads as dead
+    except AttributeError as e:
+        if not _STOP_PROBE_WARNED:
+            _STOP_PROBE_WARNED = True
+            warnings.warn(
+                f"stopped-session probe failed ({e}); treating sessions as stopped",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         return True
 
 
@@ -112,11 +126,13 @@ def epoch_us(col) -> F.Column:
 #: session strongly referenced forever so a dead session's id() could
 #: never be reused — correct but an unbounded session leak in a long-lived
 #: multi-session process. A cached DataFrame itself pins its session, so
-#: weak references cannot break that cycle; instead every ``table()`` call
-#: sweeps out entries whose session has been STOPPED (the normal end of a
-#: session's life), after which the session object — no longer reachable
-#: through the cache — is collectable, and its id() cannot be handed to a
-#: new session until then.
+#: weak references cannot break that cycle; instead the first ``table()``
+#: call of a session not yet in the cache sweeps out entries whose session
+#: has been STOPPED (the normal end of a session's life), after which the
+#: session object — no longer reachable through the cache — is
+#: collectable, and its id() cannot be handed to a new session until then.
+#: Cache hits do not sweep: ``table()`` runs hundreds of times per steering
+#: session.
 _TABLE_PLAN_CACHE: dict[int, dict[tuple, DataFrame]] = {}
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
 from limeqo_spark.complete import complete_log_space
-from limeqo_spark.plans import explain_formatted, featurize, parse_formatted_tree, plan_hash
+from limeqo_spark.plans import featurize, hinted_plan_texts, parse_formatted_tree, plan_hash
 from limeqo_spark.steer import run_steered
 from limeqo_spark.strategies import ALPHA, BETA, rank_cells_by_improvement
 from limeqo_spark.tcnn import RidgeCostModel, hint_onehot
@@ -62,7 +62,8 @@ class LiveSteeringSession:
         self.cutoffs = np.zeros((q, h))
         self.explored = np.zeros((q, h))
         self.observations: list[LiveObservation] = []
-        self._plan_cache: dict[tuple[int, int], str] = {}
+        self._text_cache: dict[int, list[str]] = {}
+        self._plan_cache: dict[int, dict[int, str]] = {}
         self._feature_cache: dict[tuple[int, int], np.ndarray] = {}
         self._tree_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
         self._tcnn = None
@@ -76,17 +77,29 @@ class LiveSteeringSession:
         masked = np.where(np.isnan(self.matrix), np.inf, self.matrix)
         return masked.min(axis=1)
 
+    def _plan_texts(self, qi: int) -> list[str]:
+        """EXPLAIN FORMATTED text of one query under every hint set,
+        captured once per session."""
+        if qi not in self._text_cache:
+            build = self.queries[self.query_ids[qi]]
+            self._text_cache[qi] = hinted_plan_texts(self.spark, build, self.hint_sets)
+        return self._text_cache[qi]
+
     def _fingerprints(self, qi: int) -> dict[int, str]:
-        """Plan hash per hint for one query (cheap: planning only)."""
-        out: dict[int, str] = {}
-        build = self.queries[self.query_ids[qi]]
-        for hj, hs in enumerate(self.hint_sets):
-            key = (qi, hj)
-            if key not in self._plan_cache:
-                with H.applied(self.spark, hs):
-                    self._plan_cache[key] = plan_hash(build())
-            out[hj] = self._plan_cache[key]
-        return out
+        """Plan hash per hint for one query: its plan-equivalence classes.
+
+        One EXPLAIN per hint set, so 49 Catalyst optimize-and-plan passes
+        per query and session. Building the query is the dearer part, so
+        it is built once per join-hint family and re-planned under each
+        hint set's confs (:func:`~limeqo_spark.plans.hinted_plan_texts`).
+        That is exact only while the confs never change analysis: they may
+        steer the optimizer, the planner and execution, nothing earlier.
+        """
+        if qi not in self._plan_cache:
+            self._plan_cache[qi] = {
+                hj: plan_hash(text) for hj, text in enumerate(self._plan_texts(qi))
+            }
+        return self._plan_cache[qi]
 
     def _features(self, qi: int, hj: int) -> np.ndarray:
         """LimeQO+ live featurization (A22/A27 on real Spark plans): parse
@@ -94,14 +107,9 @@ class LiveSteeringSession:
         node-histogram feature vector, concatenated with the hint one-hot."""
         key = (qi, hj)
         if key not in self._feature_cache:
-            build = self.queries[self.query_ids[qi]]
-            hs = self.hint_sets[hj]
-            with H.applied(self.spark, hs):
-                text = explain_formatted(build())
-            self._plan_cache.setdefault(key, plan_hash(text))
             from limeqo_spark.plans import NODE_VOCABULARY
 
-            tree = parse_formatted_tree(text)
+            tree = parse_formatted_tree(self._plan_texts(qi)[hj])
             plan_vec = (
                 featurize(tree)
                 if tree is not None
@@ -217,12 +225,7 @@ class LiveSteeringSession:
             from limeqo_spark.plans import NODE_VOCABULARY
             from limeqo_spark.tcnn import flatten_tree
 
-            build = self.queries[self.query_ids[qi]]
-            hs = self.hint_sets[hj]
-            with H.applied(self.spark, hs):
-                text = explain_formatted(build())
-            self._plan_cache.setdefault(key, plan_hash(text))
-            tree = parse_formatted_tree(text)
+            tree = parse_formatted_tree(self._plan_texts(qi)[hj])
             if tree is None:
                 d = len(NODE_VOCABULARY)
                 self._tree_cache[key] = (np.zeros((2, d)), np.zeros((2, 2), dtype=np.int64))
@@ -246,11 +249,10 @@ class LiveSteeringSession:
         flats, hash_to_id = [], {}
         for qi in range(q):
             for hj in range(h):
-                self._flat_tree(qi, hj)  # also fills the plan-hash cache
-                ph = self._plan_cache[(qi, hj)]
+                ph = self._fingerprints(qi)[hj]
                 if ph not in hash_to_id:
                     hash_to_id[ph] = len(flats)
-                    flats.append(self._tree_cache[(qi, hj)])
+                    flats.append(self._flat_tree(qi, hj))
                 tree_of[(qi, hj)] = hash_to_id[ph]
         trees = collate_trees(flats)
         xs, qs, hs_, ys, cuts = [], [], [], [], []

@@ -15,11 +15,14 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from limeqo_spark import hints as H
 
 #: pinned Spark physical node vocabulary (SURVEY §4.3). Order matters —
 #: feature vectors are versioned by this registry.
@@ -65,6 +68,31 @@ def explain_formatted(df: DataFrame) -> str:
         )
     except Exception:
         return qe.explainString(qe.explainString.__class__)  # pragma: no cover
+
+
+def hinted_plan_texts(
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
+    hint_sets: Sequence[H.HintSet],
+) -> list[str]:
+    """EXPLAIN FORMATTED text of ``build()`` under each hint set, in order.
+
+    The query is built once per join-hint family (``HintSet.join_hint``),
+    inside ``hints.applied`` of the family's first hint set so io.table
+    tags the base relations. Each hint set then plans a fresh Dataset
+    derived from that build (``select("*")`` under its own ``applied``):
+    a new QueryExecution, optimized and planned under the set's confs.
+    This gives the plan a fresh build would get because a HintSet's confs
+    only steer optimization, planning and execution, never analysis.
+    """
+    built: dict[str | None, DataFrame] = {}
+    texts = []
+    for hs in hint_sets:
+        with H.applied(spark, hs):
+            if hs.join_hint not in built:
+                built[hs.join_hint] = build()
+            texts.append(explain_formatted(built[hs.join_hint].select("*")))
+    return texts
 
 
 _STRIP_PATTERNS = [

@@ -18,7 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
-from limeqo_spark.plans import explain_formatted, plan_hash
+from limeqo_spark.plans import explain_formatted, hinted_plan_texts, plan_hash
 
 
 @dataclass
@@ -88,16 +88,18 @@ def probe_hint_space(
     physical plan only once (A15/A18): equivalent plans inherit the measured
     latency instead of re-running."""
     hint_sets = hint_sets if hint_sets is not None else H.REGISTRY
+    fps: list[str | None] = (
+        [plan_hash(t) for t in hinted_plan_texts(spark, build, hint_sets)]
+        if dedup_by_plan
+        else [None] * len(hint_sets)
+    )
     runs: list[SteeredRun] = []
     seen: dict[str, SteeredRun] = {}
-    for hs in hint_sets:
-        if dedup_by_plan:
-            with H.applied(spark, hs):
-                fp = plan_hash(build())
-            if fp in seen:
-                prior = seen[fp]
-                runs.append(SteeredRun(hs.hint_id, prior.latency, prior.censor_cutoff, fp, ""))
-                continue
+    for hs, fp in zip(hint_sets, fps):
+        if fp in seen:
+            prior = seen[fp]
+            runs.append(SteeredRun(hs.hint_id, prior.latency, prior.censor_cutoff, fp, ""))
+            continue
         run = run_steered(spark, build, hs, timeout_s)
         seen[run.plan_hash] = run
         runs.append(run)

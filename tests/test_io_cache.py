@@ -7,7 +7,10 @@ evicted before the id can be handed to a new session)."""
 from __future__ import annotations
 
 import gc
+import warnings
 import weakref
+
+import pytest
 
 from limeqo_spark import io as lio
 
@@ -66,3 +69,28 @@ def test_confs_pinned_id_released_on_collection():
     del sess
     gc.collect()
     assert sid not in lio._CONFS_PINNED
+
+
+def test_stop_probe_failure_warns_once_and_reads_as_stopped(monkeypatch):
+    """Only a missing private ``_jsc`` handle is tolerated: it reads as a
+    stopped session, with a single warning across calls."""
+    monkeypatch.setattr(lio, "_STOP_PROBE_WARNED", False)
+
+    class _NoHandle:
+        sparkContext = object()
+
+    with pytest.warns(RuntimeWarning, match="stopped-session probe failed"):
+        assert lio._session_stopped(_NoHandle())
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert lio._session_stopped(_NoHandle())
+
+
+def test_stop_probe_does_not_swallow_other_errors():
+    class _Broken:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("py4j gateway gone")
+
+    with pytest.raises(RuntimeError):
+        lio._session_stopped(_Broken())

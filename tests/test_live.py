@@ -138,6 +138,87 @@ def test_manifest_queries_steerable(spark):
         assert build().limit(1).count() >= 0
 
 
+def _fresh_build_hashes(spark, build) -> list[str]:
+    """Reference fingerprints: the query rebuilt from scratch under every
+    hint set of the registry."""
+    from limeqo_spark import hints as H
+    from limeqo_spark.plans import plan_hash
+
+    out = []
+    for hs in H.REGISTRY:
+        with H.applied(spark, hs):
+            out.append(plan_hash(build()))
+    return out
+
+
+def _assert_fingerprints_match_fresh_builds(spark, wl) -> None:
+    s = LiveSteeringSession(spark, dict(wl), warmup=False)
+    for qi, name in enumerate(s.query_ids):
+        got = s._fingerprints(qi)
+        want = _fresh_build_hashes(spark, wl[name])
+        diff = [hj for hj in range(len(want)) if got[hj] != want[hj]]
+        assert not diff, f"{name}: hint sets {diff} plan differently when re-planned"
+
+
+def test_fingerprints_match_fresh_builds_on_steering_shapes(spark):
+    """Re-planning one build per join-hint family gives every hint set the
+    plan hash a fresh build under that set gets, on every steering shape."""
+    from limeqo_spark.workloads import steering_workload
+
+    _assert_fingerprints_match_fresh_builds(spark, steering_workload(spark, SF))
+
+
+def test_fingerprints_match_fresh_builds_on_manifest_queries(spark):
+    from limeqo_spark.workloads import manifest_workload
+
+    wl = manifest_workload(spark, SF, ["q47_tpch_q3_shipping", "q16_tpch_q1_agg"])
+    _assert_fingerprints_match_fresh_builds(spark, wl)
+
+
+def test_fingerprint_pass_builds_once_per_join_hint_family(spark):
+    """One fingerprint pass over 49 hint sets builds the query once per
+    distinct join hint; plan features of the same query build nothing."""
+    from limeqo_spark import hints as H
+    from limeqo_spark.workloads import steering_workload
+
+    star = steering_workload(spark, SF)["star_5way"]
+    calls = 0
+
+    def counted():
+        nonlocal calls
+        calls += 1
+        return star()
+
+    s = LiveSteeringSession(spark, {"star": counted}, warmup=False)
+    fps = s._fingerprints(0)
+    assert len(fps) == len(H.REGISTRY) and len(set(fps.values())) > 1
+    families = len({hs.join_hint for hs in H.REGISTRY})
+    assert calls <= families
+    s._fingerprints(0)
+    s._features(0, 17)
+    s._flat_tree(0, 48)
+    assert calls <= families
+
+
+def test_probe_hint_space_groups_by_fresh_build_plans(spark):
+    """probe_hint_space keeps its (hint_id, plan_hash) grouping: every hint
+    set carries the hash of a fresh build under it, and each distinct plan
+    is executed exactly once."""
+    from limeqo_spark import hints as H
+    from limeqo_spark.steer import probe_hint_space
+    from limeqo_spark.workloads import steering_workload
+
+    build = steering_workload(spark, SF)["fact_fact"]
+    runs = probe_hint_space(spark, build, timeout_s=120.0)
+    want = _fresh_build_hashes(spark, build)
+    assert [(r.hint_id, r.plan_hash) for r in runs] == [
+        (hs.hint_id, fp) for hs, fp in zip(H.REGISTRY, want)
+    ]
+    executed = [r for r in runs if r.plan_text]
+    assert len(executed) == len(set(want))
+    assert all(r.latency is not None for r in runs)
+
+
 def test_tcnn_model_exploration_on_real_plans(spark):
     """LimeQO+ live with the executable numpy tree-CNN: exploration over
     REAL EXPLAIN trees makes progress; the fitted model's training loss
