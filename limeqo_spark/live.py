@@ -22,10 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from limeqo_spark import hints as H
 from limeqo_spark.complete import complete_log_space
-from limeqo_spark.plans import featurize, hinted_plan_texts, parse_formatted_tree, plan_hash
+from limeqo_spark.plans import hinted_plan_texts, parse_formatted_tree, plan_hash
 from limeqo_spark.steer import run_steered
-from limeqo_spark.strategies import ALPHA, BETA, rank_cells_by_improvement
-from limeqo_spark.tcnn import RidgeCostModel, hint_onehot
+from limeqo_spark.strategies import ALPHA, BETA, COST_MODELS, rank_cells_by_improvement
 
 
 @dataclass
@@ -64,7 +63,6 @@ class LiveSteeringSession:
         self.observations: list[LiveObservation] = []
         self._text_cache: dict[int, list[str]] = {}
         self._plan_cache: dict[int, dict[int, str]] = {}
-        self._feature_cache: dict[tuple[int, int], np.ndarray] = {}
         self._tree_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray]] = {}
         self._tcnn = None
 
@@ -100,25 +98,6 @@ class LiveSteeringSession:
                 hj: plan_hash(text) for hj, text in enumerate(self._plan_texts(qi))
             }
         return self._plan_cache[qi]
-
-    def _features(self, qi: int, hj: int) -> np.ndarray:
-        """LimeQO+ live featurization (A22/A27 on real Spark plans): parse
-        the EXPLAIN FORMATTED tree of THIS query under THIS HintSet into the
-        node-histogram feature vector, concatenated with the hint one-hot."""
-        key = (qi, hj)
-        if key not in self._feature_cache:
-            from limeqo_spark.plans import NODE_VOCABULARY
-
-            tree = parse_formatted_tree(self._plan_texts(qi)[hj])
-            plan_vec = (
-                featurize(tree)
-                if tree is not None
-                else np.zeros(len(NODE_VOCABULARY) + 2)
-            )
-            self._feature_cache[key] = np.concatenate(
-                [plan_vec, hint_onehot(hj, len(self.hint_sets))]
-            )
-        return self._feature_cache[key]
 
     def _record(self, qi: int, hj: int, latency: float | None, cutoff: float | None, fp: str, measured: bool) -> None:
         self.explored[qi, hj] = 1
@@ -193,30 +172,6 @@ class LiveSteeringSession:
                     )
                 self.execute_cell(qi, 0, timeout_s)
 
-    def _predict_plan_model(self) -> np.ndarray:
-        """LimeQO+ live prediction: fit the plan-feature cost model (ridge
-        fallback of the TCNN, A21/A25-A27) on every explored cell — observed
-        latency or censoring cutoff — and predict the full Q x H matrix from
-        the real EXPLAIN features. Observed cells keep their true value."""
-        xs, ys, cuts = [], [], []
-        for qi, hj in np.argwhere(self.explored > 0):
-            lat, cut = self.matrix[qi, hj], self.cutoffs[qi, hj]
-            if np.isnan(lat) and cut <= 0:
-                continue
-            xs.append(self._features(int(qi), int(hj)))
-            ys.append(0.0 if np.isnan(lat) else lat)
-            cuts.append(cut)
-        if not xs:
-            raise RuntimeError(
-                "plan-model exploration needs at least one observation; "
-                "call bootstrap() before explore(model='plan')"
-            )
-        model = RidgeCostModel().fit(np.asarray(xs), np.asarray(ys), np.asarray(cuts))
-        q, h = self.explored.shape
-        all_feats = np.stack([self._features(qi, hj) for qi in range(q) for hj in range(h)])
-        pred = model.predict(all_feats).reshape(q, h)
-        return np.where(np.isnan(self.matrix), pred, self.matrix)
-
     def _flat_tree(self, qi: int, hj: int):
         """Flattened (features, child-index) EXPLAIN tree for one cell —
         the real-plan input of the live TCNN (A22/A23 on Spark plans)."""
@@ -289,19 +244,18 @@ class LiveSteeringSession:
 
     def explore(self, rounds: int = 3, k: int = 4, model: str = "als") -> None:
         """LimeQO rounds: predict unobserved cells — ``model="als"`` via
-        censored-ALS matrix completion (LimeQO), ``model="plan"`` via the
-        ridge plan-feature cost model, ``model="tcnn"`` via the executable
-        numpy tree-CNN over real EXPLAIN trees (LimeQO+ live) — pick the
-        top-k improvement cells, execute them with timeout tolerance
-        min(ALPHA * best, BETA * predicted)."""
+        censored-ALS matrix completion (LimeQO), ``model="tcnn"`` via the
+        executable numpy tree-CNN over real EXPLAIN trees (LimeQO+ live) —
+        pick the top-k improvement cells, execute them with timeout
+        tolerance min(ALPHA * best, BETA * predicted)."""
+        if model not in COST_MODELS:
+            raise ValueError(f"unknown live model {model!r}; expected one of {COST_MODELS}")
         rng = np.random.default_rng(self.seed)
         for _ in range(rounds):
             if self.explored.all():
                 break
             if model == "tcnn":
                 completed = self._predict_tcnn_model()
-            elif model == "plan":
-                completed = self._predict_plan_model()
             else:
                 completed = complete_log_space(
                     np.nan_to_num(self.matrix, nan=0.0),

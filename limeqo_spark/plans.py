@@ -1,4 +1,4 @@
-"""Plan capture, canonical fingerprinting, and featurization (SURVEY §4.3).
+"""Plan capture, canonical fingerprinting, and plan-tree parsing (SURVEY §4.3).
 
 The reference featurizes PostgreSQL EXPLAIN trees (Node Type / Total Cost /
 Plan Rows / Plan Width — dataset.py:108-111 in /root/reference) and dedups
@@ -6,9 +6,10 @@ hint sets that yield the identical plan (get_same_hints, dataset.py:201-203).
 Here the steered optimizer is Catalyst: we capture ``EXPLAIN FORMATTED``
 output of a DataFrame, canonicalize it (strip expression ids, codegen ids,
 paths, statistics), hash it for plan-equivalence grouping, and parse the
-operator tree into feature vectors over a *pinned* node-type vocabulary
-(SURVEY §1.3 — reproducible feature width, unlike the reference's
-data-discovered vocabulary).
+operator tree over a *pinned* node-type vocabulary (SURVEY §1.3 —
+reproducible feature width, unlike the reference's data-discovered
+vocabulary); ``tcnn.flatten_tree`` turns a parsed tree into per-node
+feature vectors.
 """
 
 from __future__ import annotations
@@ -17,8 +18,6 @@ import hashlib
 import re
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
-
-import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -184,29 +183,3 @@ def binarize(node: PlanNode) -> PlanNode:
         merged = PlanNode(node.node_type, [kids[0], kids[1]])
         kids = [merged] + kids[2:]
     return PlanNode(node.node_type, kids)
-
-
-def featurize(node: PlanNode) -> np.ndarray:
-    """One-hot node-type histogram over the pinned vocabulary + structure
-    stats [n_nodes, depth] — the plan-level feature vector for cost models.
-    (Per-node feature matrices for the TCNN come from tcnn.flatten_tree.)"""
-    vocab_index = {v: i for i, v in enumerate(NODE_VOCABULARY)}
-    hist = np.zeros(len(NODE_VOCABULARY) + 2, dtype=np.float64)
-
-    def walk(n: PlanNode, depth: int) -> int:
-        idx = vocab_index.get(n.node_type)
-        if idx is not None:
-            hist[idx] += 1
-        d = depth
-        for c in n.children:
-            d = max(d, walk(c, depth + 1))
-        return d
-
-    max_depth = walk(node, 0)
-    hist[-2] = _count(node)
-    hist[-1] = max_depth
-    return hist
-
-
-def _count(n: PlanNode) -> int:
-    return 1 + sum(_count(c) for c in n.children)

@@ -19,7 +19,7 @@ import os
 
 import numpy as np
 
-from limeqo_spark.strategies import STRATEGIES
+from limeqo_spark.strategies import COST_MODELS, STRATEGIES
 from limeqo_spark.workload import Workload
 
 REFERENCE_DATASET_DIR = "/root/reference/dataset"
@@ -174,8 +174,8 @@ def main() -> None:
     ap.add_argument("--holdout-frac", type=float, default=0.2)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--model", default="als", choices=["als", "plan", "tcnn"])
-    ap.add_argument("--plus-model", default="als", choices=["als", "tcnn"],
+    ap.add_argument("--model", default="als", choices=COST_MODELS)
+    ap.add_argument("--plus-model", default="als", choices=COST_MODELS,
                     help="sim mode: LimeQO+ cost model")
     ap.add_argument("--net-seed", type=int, default=None,
                     help="sim mode: pin the TCNN weight init (deterministic run)")

@@ -25,6 +25,9 @@ from limeqo_spark.workload import Workload
 
 ALPHA = 1.0  # timeout tolerance: alpha * best observed latency of the query
 BETA = 15.0  # ... capped by beta * model-predicted latency
+#: LimeQO+ cost models, sim and live: restart-averaged censored ALS and the
+#: numpy tree-CNN
+COST_MODELS = ("als", "tcnn")
 
 
 @dataclass
@@ -415,11 +418,10 @@ class LimeQOPlusStrategy(LimeQOStrategy):
       :meth:`tolerance` and docs/tcnn_rescue_r5.json) — worst-of-5 fixed
       inits 2.02 -> 1.50 h at CEB@0.75h, median 1.377 h.
       Round-11 mitigation (VERDICT r10 #6): restart-averaging — ``n_nets``
-      independently-initialized nets trained per fit, predictions averaged
-      (``net_combine``). On CEB@0.75h over the five fixed inits, n_nets=3
-      mean improves the median 1.3745 -> 1.3267 h and the worst 1.4555 ->
-      1.3708 h (docs/tcnn_ensemble_lab_r11.json; ens5/median configs each
-      had one diverged seed — ens3_mean dominates on median AND worst).
+      independently-initialized nets trained per fit, predictions averaged.
+      On CEB@0.75h over the five fixed inits, n_nets=3 improves the median
+      1.3745 -> 1.3267 h and the worst 1.4555 -> 1.3708 h
+      (docs/tcnn_ensemble_lab_r11.json).
       Also the live-mode model, where the TCNN gets REAL plan trees
       (:meth:`limeqo_spark.live.LiveSteeringSession.explore`).
     """
@@ -432,22 +434,16 @@ class LimeQOPlusStrategy(LimeQOStrategy):
     n_restarts = 3
     #: embeddings-only TCNN hyperparameters (see docstring)
     tcnn_kw = {"rank": 8, "conv1": 16, "conv2": 8}
-    #: AdamW decay on the query/hint embeddings (0.0 = reference's plain
-    #: Adam; measured worse on CEB — docs/tcnn_sim_study_r3.json lab)
-    tcnn_weight_decay = 0.0
     #: TCNN explorer's per-measurement spend ceiling as a fraction of the
     #: exploration budget (see :meth:`tolerance`)
     tolerance_budget_frac = 0.02
-    #: ensemble gate config (see :meth:`_select_agreement_gated`): the ALS
-    #: veto list is gate_width*k deep; unfilled slots come from this model
-    ensemble_gate_width = 4
-    ensemble_fill = "als"
 
     def __init__(
         self, *args, rank: int = 5, iters: int = 50, lam: float = 0.2,
-        model: str = "als", net_seed: int | None = None, n_nets: int = 1,
-        net_combine: str = "mean", **kw,
+        model: str = "als", net_seed: int | None = None, n_nets: int = 1, **kw,
     ):
+        if model not in COST_MODELS:
+            raise ValueError(f"unknown LimeQO+ model {model!r}; expected one of {COST_MODELS}")
         # k=16, not the reference's k=32: the TCNN's plan features justify
         # big batches; the headless fallback re-fits more often instead.
         # Measured (3 seeds, reference matrices @ published checkpoints):
@@ -469,15 +465,13 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         self.net_seed = net_seed
         #: restart-averaged TCNN (r11, VERDICT r10 #6): train ``n_nets``
         #: independently-initialized nets on the same observations each
-        #: fit and combine their prediction matrices (``net_combine`` =
-        #: mean|median). The per-init final-latency spread is exploration
-        #: feeding on init noise; averaging independent inits is the
-        #: variance reducer that doesn't touch the architecture. Distinct
-        #: from the r3-r6 NEGATIVE (TCNN-with-ALS prediction averaging,
-        #: which mixes MODEL CLASSES and blunts the TCNN's edge).
+        #: fit and average their prediction matrices. The per-init
+        #: final-latency spread is exploration feeding on init noise;
+        #: averaging independent inits is the variance reducer that doesn't
+        #: touch the architecture. Distinct from the r3-r6 NEGATIVE
+        #: (TCNN-with-ALS prediction averaging, which mixes MODEL CLASSES
+        #: and blunts the TCNN's edge).
         self.n_nets = n_nets
-        self.net_combine = net_combine
-        self._tcnn = None
         self._tcnns: list | None = None
         # stall-triggered re-init (round 4): exploration outcome is chaotic
         # in the weight init (docs/tcnn_sim_study_r3.json — seeds split
@@ -500,19 +494,8 @@ class LimeQOPlusStrategy(LimeQOStrategy):
     def fit(self) -> None:
         if self.model == "tcnn":
             self._fit_tcnn()
-            return
-        if self.model == "ensemble":
-            # selection-level ensemble (VERDICT r8 #5b): fit BOTH models.
-            # Prediction-level averaging was a measured NEGATIVE (r3-r6,
-            # docs/tcnn_sim_study_r3.json — it destroys the TCNN explorer's
-            # edge), so the combination happens in select(), not here.
-            self._fit_tcnn()
-            self._tcnn_pred = self.pred
+        else:
             self._fit_als()
-            self._als_pred = self.pred
-            self.pred = self._tcnn_pred  # primary estimator stays the TCNN
-            return
-        self._fit_als()
 
     def _fit_als(self) -> None:
         st = self.state
@@ -539,8 +522,8 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         if total >= self._last_total * (1 - 1e-3):
             self._stall += 1
             if self._stall >= self.reinit_patience and self._tcnns is not None:
-                # bad init detected: cold-start the whole ensemble
-                self._tcnn = self._tcnns = None
+                # bad init detected: cold-start every net
+                self._tcnns = None
                 self._reinits += 1
                 self._stall = 0
         else:
@@ -557,8 +540,8 @@ class LimeQOPlusStrategy(LimeQOStrategy):
                 if self.net_seed is not None
                 else int(self.rng.integers(2**31))
             )
-            # derived seeds: reinit shifts by 7919 (the r4 idiom), ensemble
-            # members shift by 104729 so no (reinit, member) pair collides
+            # derived seeds: reinit shifts by 7919 (the r4 idiom), averaged
+            # nets shift by 104729 so no (reinit, member) pair collides
             self._tcnns = [
                 NumpyTCNN(
                     4, *self.wl.matrix.shape,
@@ -577,7 +560,7 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         for net in self._tcnns:
             net.fit(
                 self._dummy, np.zeros(len(qi), dtype=np.int64), qi, hj, lat, cut,
-                epochs=epochs, lr=1e-2, weight_decay=self.tcnn_weight_decay,
+                epochs=epochs, lr=1e-2,
             )
             preds.append(
                 net.predict(
@@ -585,23 +568,11 @@ class LimeQOPlusStrategy(LimeQOStrategy):
                     allq.ravel(), allh.ravel(),
                 ).reshape(q, h)
             )
-        stacked = np.stack(preds)
-        if self.net_combine == "median":
-            self.pred = np.median(stacked, axis=0)
-        elif self.net_combine == "gmean":
-            # geometric mean: latency prediction error is multiplicative,
-            # so averaging in log space keeps one net's overestimate from
-            # dominating the combined cell the way an arithmetic mean does
-            self.pred = np.expm1(np.mean(np.log1p(np.clip(stacked, 0, None)), axis=0))
-        else:
-            self.pred = np.mean(stacked, axis=0)
-        self._tcnn = self._tcnns[0]  # back-compat handle (tests, live mode)
+        self.pred = np.mean(np.stack(preds), axis=0)
 
     def select(self) -> list[tuple[int, int]]:
         st = self.state
         assert self.pred is not None
-        if self.model == "ensemble":
-            return self.random_fill(self._select_agreement_gated())
         # the free-form TCNN needs the absolute-gain guard (see
         # rank_cells_by_improvement); the multiplicative ALS does not
         min_gain = 0.01 if self.model == "tcnn" else 0.0
@@ -609,36 +580,6 @@ class LimeQOPlusStrategy(LimeQOStrategy):
             self.pred, st.explored, st.min_observed(), self.k, min_gain=min_gain
         )
         return self.random_fill(out)
-
-    def _select_agreement_gated(self) -> list[tuple[int, int]]:
-        """Agreement-gated batch (VERDICT r8 #5b): a TCNN pick enters the
-        batch only if the restart-averaged censored ALS ALSO ranks it in
-        its own extended top list — the TCNN keeps its precise ordering,
-        the ALS veto filters the init-noise picks that cost mid-checkpoint
-        budget; the remainder fills from the ALS ranking (the robust
-        explorer — plain-LimeQO beats ITS baseline on CEB), then TCNN.
-        MEASURED NEGATIVE on CEB (docs/ensemble_lab_r9.json): the veto
-        shapes batches toward expensive ALS-style reveals, cutting the
-        round count ~4x per budget; kept as a reproducible config, not
-        used by bench."""
-        st = self.state
-        mo = st.min_observed()
-        wide = self.ensemble_gate_width * self.k
-        t_ranked = rank_cells_by_improvement(
-            self._tcnn_pred, st.explored, mo, wide, min_gain=0.01
-        )
-        a_ranked = rank_cells_by_improvement(self._als_pred, st.explored, mo, wide)
-        a_set = set(a_ranked)
-        out = [c for c in t_ranked if c in a_set][: self.k]
-        fills = (
-            a_ranked + t_ranked if self.ensemble_fill == "als" else t_ranked + a_ranked
-        )
-        for c in fills:
-            if len(out) >= self.k:
-                break
-            if c not in out:
-                out.append(c)
-        return out
 
     #: floor (seconds of exploration spend) under which the spent-scaled
     #: cap stops tightening — early probes may cost up to 2% x 300 s
@@ -673,7 +614,7 @@ class LimeQOPlusStrategy(LimeQOStrategy):
         explorer; the ALS strategies never exhibit the failure and keep
         the reference's exact guard."""
         tol = super().tolerance(i, j)
-        if self.model in ("tcnn", "ensemble"):
+        if self.model == "tcnn":
             anchor = max(self.state.spent, self.tolerance_spent_floor)
             tol = min(tol, self.tolerance_budget_frac * anchor)
         return tol

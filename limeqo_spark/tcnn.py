@@ -1,35 +1,20 @@
-"""Tree-convolution cost model (SURVEY A21-A27) with a numpy fallback.
+"""Tree-convolution cost model (SURVEY A21-A27), in numpy.
 
 The reference's LimeQO+ trains a tree-CNN over EXPLAIN plan trees
-(tcnn.py / limeqo_plus.py in /root/reference): per-node feature vectors,
+(tcnn.py / limeqo_plus.py in the reference): per-node feature vectors,
 tree convolution over (node, left-child, right-child) triples, dynamic
-max-pool, query/hint embeddings, MLP head, censored MSE loss. Torch is not
-present in this container, so:
-
-  - :func:`flatten_tree` / :class:`TorchTCNN` implement the full model,
-    import-gated behind torch (usable where torch exists);
-  - :class:`RidgeCostModel` is the always-available fallback: plan-level
-    features (node-type histogram from plans.featurize) + hint one-hot,
-    fit by ridge regression with the same hinge-censoring iteration
-    (censored targets are raised to their cutoff whenever the model
-    prediction falls below it).
+max-pool, query/hint embeddings, MLP head, censored MSE loss.
+:func:`flatten_tree` turns a parsed plan into the per-node features (A22),
+and :class:`NumpyTCNN` is the model with an explicit forward/backward pass,
+trained with a hinge-censored loss (censored rows are penalized only when
+the prediction falls below their cutoff).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import numpy as np
 
 from limeqo_spark.plans import NODE_VOCABULARY, PlanNode, binarize
-
-try:  # pragma: no cover - torch not in the build container
-    import torch
-    from torch import nn
-
-    HAS_TORCH = True
-except ImportError:
-    HAS_TORCH = False
 
 
 def flatten_tree(root: PlanNode) -> tuple[np.ndarray, np.ndarray]:
@@ -57,72 +42,21 @@ def flatten_tree(root: PlanNode) -> tuple[np.ndarray, np.ndarray]:
     return np.asarray(feats, dtype=np.float32), np.asarray(children, dtype=np.int64)
 
 
-if HAS_TORCH:  # pragma: no cover - torch not in the build container
-
-    class TreeConv(nn.Module):
-        """One tree-convolution block: gather (node, left, right) per node,
-        1-D conv with kernel 3 / stride 3 == a dense layer over the triple."""
-
-        def __init__(self, in_dim: int, out_dim: int) -> None:
-            super().__init__()
-            self.conv = nn.Conv1d(in_dim, out_dim, kernel_size=3, stride=3)
-
-        def forward(self, feats: torch.Tensor, child_idx: torch.Tensor) -> torch.Tensor:
-            # feats: (batch, n, d); child_idx: (batch, n, 2)
-            b, n, d = feats.shape
-            left = torch.gather(feats, 1, child_idx[:, :, 0:1].expand(b, n, d))
-            right = torch.gather(feats, 1, child_idx[:, :, 1:2].expand(b, n, d))
-            triples = torch.stack([feats, left, right], dim=2).reshape(b, n * 3, d)
-            out = self.conv(triples.transpose(1, 2)).transpose(1, 2)
-            return torch.relu(out)
-
-    class TorchTCNN(nn.Module):
-        """Tree-CNN cost model: 2 tree-conv blocks -> dynamic max pool ->
-        concat query/hint embeddings -> MLP -> latency (log space)."""
-
-        def __init__(self, n_features: int, n_queries: int, n_hints: int, rank: int = 8):
-            super().__init__()
-            self.c1 = TreeConv(n_features, 256)
-            self.c2 = TreeConv(256, 128)
-            self.norm = nn.LayerNorm(128)
-            self.q_emb = nn.Embedding(n_queries, rank)
-            self.h_emb = nn.Embedding(n_hints, rank)
-            self.head = nn.Sequential(
-                nn.Linear(128 + 2 * rank, 32), nn.ReLU(), nn.Linear(32, 16), nn.ReLU(), nn.Linear(16, 1)
-            )
-
-        def forward(self, feats, child_idx, q_idx, h_idx):
-            x = self.c2(self.c1(feats, child_idx), child_idx)
-            pooled = self.norm(x.max(dim=1).values)
-            z = torch.cat([pooled, self.q_emb(q_idx), self.h_emb(h_idx)], dim=1)
-            return self.head(z).squeeze(-1)
-
-    def censored_mse_loss(pred, target, cutoff):
-        """Hinge censoring: censored rows (cutoff > 0) incur loss only when
-        the prediction falls below the cutoff."""
-        censored = cutoff > 0
-        mse = (pred - target) ** 2
-        hinge = torch.clamp(cutoff - pred, min=0.0) ** 2
-        return torch.where(censored, hinge, mse).mean()
-
-
 class NumpyTCNN:
     """Tree-CNN cost model with explicit numpy forward/backward — the
-    torch-free realization of the reference's TCNN (SURVEY A21/A24-A26;
+    reference's TCNN (SURVEY A21/A24-A26;
     reference ``src/models/tcnn.py:53-94`` architecture, censored training
     loop ``src/strategies/limeqo_plus.py:193-234``, censored loss semantics
     ``limeqo_plus.py:263-268``).
 
-    Architecture (mirrors :class:`TorchTCNN` above): two tree-convolution
-    blocks — gather (node, left, right) triples, dense over the
-    concatenated triple (== Conv1d kernel 3 stride 3), ReLU — then dynamic
-    max-pool over nodes, LayerNorm, concat query/hint embeddings, and a
-     32-16-1 MLP head. Deviations from the torch version, both documented:
-    no dropout (deterministic numpy training; the reference uses p=0.3),
-    and the censored loss is the hinge form (censored rows only penalize
-    predictions below their cutoff) rather than the reference's
-    mse-vs-revealed-label variant, matching this repo's
-    ``censored_mse_loss`` / ``RidgeCostModel``.
+    Architecture: two tree-convolution blocks — gather (node, left, right)
+    triples, dense over the concatenated triple (== Conv1d kernel 3
+    stride 3), ReLU — then dynamic max-pool over nodes, LayerNorm, concat
+    query/hint embeddings, and a 32-16-1 MLP head. Deviations from the
+    reference, both documented: no dropout (deterministic numpy training;
+    the reference uses p=0.3), and the censored loss is the hinge form
+    (censored rows only penalize predictions below their cutoff) rather
+    than the reference's mse-vs-revealed-label variant.
 
     Samples reference *unique trees* by id: ``fit``/``predict`` take the
     stacked unique-tree tensors plus a per-sample ``tree_id``. The conv
@@ -272,15 +206,7 @@ class NumpyTCNN:
         self._conv_backward(conv, dln, grads)
         return grads
 
-    #: parameters receiving decoupled weight decay (AdamW): the query/hint
-    #: embeddings. Rows never seen in training keep shrinking toward 0, so
-    #: an UNSEEN (query, hint) combination predicts the learned baseline
-    #: (MLP at zero embeddings) instead of init-noise extrapolation — without
-    #: this, unexplored cells can collapse to near-zero latency predictions
-    #: and hijack the improvement ranking (observed on the CEB sim).
-    _DECAYED = ("Q", "H")
-
-    def _adam_step(self, grads: dict, lr: float, weight_decay: float = 0.0) -> None:
+    def _adam_step(self, grads: dict, lr: float) -> None:
         self._adam_t += 1
         b1, b2, eps = 0.9, 0.999, 1e-8
         for k, gr in grads.items():
@@ -289,8 +215,6 @@ class NumpyTCNN:
             mhat = self._adam_m[k] / (1 - b1 ** self._adam_t)
             vhat = self._adam_v[k] / (1 - b2 ** self._adam_t)
             self.p[k] -= lr * mhat / (np.sqrt(vhat) + eps)
-            if weight_decay and k in self._DECAYED:
-                self.p[k] -= lr * weight_decay * self.p[k]
 
     # --- censored hinge loss in scaled-log space
     def _scale_fit(self, y: np.ndarray, cutoffs: np.ndarray) -> None:
@@ -324,7 +248,6 @@ class NumpyTCNN:
         epochs: int = 200,
         lr: float = 5e-3,
         stop_loss: float = 0.1,
-        weight_decay: float = 0.0,
     ) -> "NumpyTCNN":
         """Full-batch Adam with the reference's convergence early-stop
         (loss < ``stop_loss`` and plateau vs 10 epochs back —
@@ -347,7 +270,7 @@ class NumpyTCNN:
             self.loss_curve.append(loss)
             dout = 2.0 * err / n
             grads = self._backward(conv, f, tree_id, q_idx, h_idx, dout)
-            self._adam_step(grads, lr, weight_decay)
+            self._adam_step(grads, lr)
             lc = self.loss_curve
             if len(lc) > 10 and lc[-1] < stop_loss:
                 last_two = min(lc[-2:])
@@ -393,58 +316,3 @@ def collate_trees(
         feats[t, : f.shape[0]] = f
         child[t, : c.shape[0]] = c
     return feats, child
-
-
-@dataclass
-class RidgeCostModel:
-    """Fallback cost model: ridge over [plan-histogram || hint one-hot]
-    features with hinge-censoring iterations, in log1p latency space.
-    Features are min-max scaled per column at fit time (A9: the reference
-    normalizes plan features with a MinMaxScaler pipeline,
-    dataset.py:114-139) — histogram counts and structure stats live on very
-    different scales, and a shared ridge penalty punishes the small ones."""
-
-    lam: float = 1.0
-    iters: int = 20
-    weights: np.ndarray | None = None
-    f_min: np.ndarray | None = None
-    f_range: np.ndarray | None = None
-
-    def _scale(self, features: np.ndarray) -> np.ndarray:
-        return (features - self.f_min) / self.f_range
-
-    def fit(
-        self,
-        features: np.ndarray,  # (n, f) plan-level features
-        latency: np.ndarray,  # (n,) observed latencies (ignored where censored)
-        cutoffs: np.ndarray | None = None,  # (n,) censor cutoffs; 0 = observed
-    ) -> "RidgeCostModel":
-        self.f_min = features.min(axis=0)
-        self.f_range = np.where(
-            features.max(axis=0) > self.f_min, features.max(axis=0) - self.f_min, 1.0
-        )
-        features = self._scale(features)
-        x = np.hstack([features, np.ones((len(features), 1))])
-        y = np.log1p(latency.copy())
-        cut = np.log1p(cutoffs) if cutoffs is not None else np.zeros_like(y)
-        target = np.where(cut > 0, cut, y)
-        gram_reg = self.lam * np.eye(x.shape[1])
-        w = np.linalg.solve(x.T @ x + gram_reg, x.T @ target)
-        for _ in range(self.iters if cutoffs is not None and (cut > 0).any() else 0):
-            pred = x @ w
-            # hinge: censored rows only constrain from below
-            t = np.where((cut > 0) & (pred >= cut), pred, target)
-            w = np.linalg.solve(x.T @ x + gram_reg, x.T @ t)
-        self.weights = w
-        return self
-
-    def predict(self, features: np.ndarray) -> np.ndarray:
-        assert self.weights is not None, "fit first"
-        x = np.hstack([self._scale(features), np.ones((len(features), 1))])
-        return np.expm1(np.clip(x @ self.weights, None, 50.0))
-
-
-def hint_onehot(hint_id: int, n_hints: int) -> np.ndarray:
-    v = np.zeros(n_hints)
-    v[hint_id] = 1.0
-    return v

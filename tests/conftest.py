@@ -7,6 +7,7 @@ import pytest
 
 from limeqo_spark.io import TABLES
 from limeqo_spark.session import get_spark
+from limeqo_spark.workload import Workload
 
 SF_DIR = os.environ.get("LIMEQO_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -32,3 +33,17 @@ def ddb():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def synthetic_job() -> Workload:
+    """Deterministic in-repo stand-in for the reference JOB matrix, for tests
+    whose assertions are properties of the code rather than of the data:
+    the same 113x49 shape, a rank-5 matrix with 10% noise in the tens of
+    seconds, and ~10% of cells observed plus the whole default column, so
+    every strategy has room to improve and timeouts do censor cells. Shared
+    by the session: a test that changes it must restore it."""
+    base = Workload.synthetic_low_rank(
+        n_rows=113, n_cols=49, rank=5, noise=0.1, seed=11, density=0.1
+    )
+    return Workload(base.matrix * 10, base.mask)

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
 from limeqo_spark.complete import als_complete, complete_log_space
+from limeqo_spark.run_experiment import REFERENCE_DATASET_DIR
 from limeqo_spark.workload import Workload
 
 
@@ -45,12 +48,17 @@ def test_log_space_pipeline_preserves_observed():
     assert (res.completed >= 0).all()
 
 
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(REFERENCE_DATASET_DIR, "job-matrix.csv")),
+    reason="reference dataset absent: this smoke checks the reference's own "
+    "shipped JOB matrix (113x49, BASELINE.md)",
+)
 @pytest.mark.parametrize("ds", ["job"])
 def test_reference_matrix_loads_and_completes(ds):
     """(c) smoke on the reference's own shipped matrix (smallest: JOB)."""
     wl = Workload.from_reference(
-        f"/root/reference/dataset/{ds}-matrix.csv",
-        f"/root/reference/dataset/init_{ds}_mask.npy",
+        os.path.join(REFERENCE_DATASET_DIR, f"{ds}-matrix.csv"),
+        os.path.join(REFERENCE_DATASET_DIR, f"init_{ds}_mask.npy"),
     )
     assert wl.matrix.shape == (113, 49)
     assert wl.mask[:, 0].all(), "default plan column must be fully observed"

@@ -69,25 +69,13 @@ def test_long_df_roundtrip(session, spark):
     assert bad == 0
 
 
-def test_plan_model_exploration(spark):
-    """LimeQO+ live: exploration driven by the plan-feature cost model over
-    real EXPLAIN trees makes progress and keeps state invariants."""
-    def dim_join():
-        li = table(spark, SF, "lineitem")
-        p = table(spark, SF, "part")
-        return li.join(p, li.l_partkey == p.p_partkey).groupBy("p_brand").count()
-
-    s = LiveSteeringSession(spark, {"dim": dim_join}, iters=20)
-    s.bootstrap(timeout_s=120.0)
-    before = int(s.explored.sum())
-    s.explore(rounds=2, k=3, model="plan")
-    assert int(s.explored.sum()) > before
-    # features exist for explored cells and have plan + hint parts
-    qi, hj = map(int, np.argwhere(s.explored > 0)[-1])
-    f = s._features(qi, hj)
-    assert f.shape[0] > len(s.hint_sets) and np.isfinite(f).all()
-    best = s.best_hints()
-    assert "dim" in best and best["dim"][1] > 0
+@pytest.mark.parametrize("model", ["plan", "ensemble", "bogus"])
+def test_explore_rejects_unknown_model(spark, model):
+    """An unknown cost model is an error, not a silent switch to ALS."""
+    s = LiveSteeringSession(spark, {"q": lambda: None}, warmup=False)
+    with pytest.raises(ValueError, match="expected one of"):
+        s.explore(rounds=1, model=model)
+    assert s.explored.sum() == 0
 
 
 def test_steering_workload_shapes(spark):
@@ -195,7 +183,7 @@ def test_fingerprint_pass_builds_once_per_join_hint_family(spark):
     families = len({hs.join_hint for hs in H.REGISTRY})
     assert calls <= families
     s._fingerprints(0)
-    s._features(0, 17)
+    s._flat_tree(0, 17)
     s._flat_tree(0, 48)
     assert calls <= families
 

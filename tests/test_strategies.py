@@ -1,20 +1,28 @@
-"""Strategy simulation golden tests on the reference's JOB matrix
-(SURVEY §5.2.4): curves bounded by [opt, default], monotone improvement,
-LimeQO beats Random at equal exploration budget."""
+"""Strategy simulation golden tests (SURVEY §5.2.4): curves bounded by
+[opt, default], monotone improvement, censoring accounting. They run on the
+deterministic JOB-shaped ``synthetic_job`` matrix; the comparison against
+published JOB checkpoints (LimeQO beats Random at equal exploration
+budget) runs only where the reference dataset is present."""
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pytest
 
+from limeqo_spark.run_experiment import REFERENCE_DATASET_DIR
 from limeqo_spark.strategies import (
     STRATEGIES,
     GreedyStrategy,
+    LimeQOPlusStrategy,
     LimeQOStrategy,
     OracleStrategy,
     RandomStrategy,
 )
 from limeqo_spark.workload import Workload
+
+JOB_CSV = os.path.join(REFERENCE_DATASET_DIR, "job-matrix.csv")
 
 REQUIRED_METRIC_KEYS = {
     "training_time",
@@ -30,10 +38,9 @@ REQUIRED_METRIC_KEYS = {
 
 
 @pytest.fixture(scope="module")
-def job() -> Workload:
+def reference_job() -> Workload:
     return Workload.from_reference(
-        "/root/reference/dataset/job-matrix.csv",
-        "/root/reference/dataset/init_job_mask.npy",
+        JOB_CSV, os.path.join(REFERENCE_DATASET_DIR, "init_job_mask.npy")
     )
 
 
@@ -41,7 +48,8 @@ def job() -> Workload:
 # CURRENT-POLICY latency (not best-observed), so it has its own invariant
 # test (test_bao_baseline_guarded_and_greedy)
 @pytest.mark.parametrize("name", sorted(set(STRATEGIES) - {"bao"}))
-def test_strategy_invariants(job, name):
+def test_strategy_invariants(synthetic_job, name):
+    job = synthetic_job
     strat = STRATEGIES[name](job, k=8, seed=1, max_rounds=12)
     records = strat.run()
     assert len(records) >= 2
@@ -53,30 +61,36 @@ def test_strategy_invariants(job, name):
     assert REQUIRED_METRIC_KEYS <= set(records[0])
 
 
-def test_oracle_is_lower_envelope(job):
-    oracle = OracleStrategy(job, k=16, seed=0, max_rounds=400)
+def test_oracle_is_lower_envelope(synthetic_job):
+    oracle = OracleStrategy(synthetic_job, k=16, seed=0, max_rounds=400)
     records = oracle.run()
-    assert records[-1]["total_latency"] <= job.opt_time + 20 + 1e-6
+    assert records[-1]["total_latency"] <= synthetic_job.opt_time + 20 + 1e-6
 
 
-def test_limeqo_beats_random_at_budget(job):
+@pytest.mark.skipif(
+    not os.path.exists(JOB_CSV),
+    reason="reference dataset absent: JOB@90s random 138 vs limeqo 112 "
+    "(BASELINE.md) are published numbers of the reference JOB matrix",
+)
+def test_limeqo_beats_random_at_budget(reference_job):
     """At a small exploration budget (JOB@90s in BASELINE.md: random 138 vs
     limeqo 112) the model should win on average. Single runs are noisy (the
     reference averages 20); we average 3 seeds and allow 5% slack."""
     budget = 90.0  # seconds of simulated exploration
     lq_finals, rnd_finals = [], []
     for seed in (3, 4, 5):
-        lq = LimeQOStrategy(job, k=8, seed=seed, max_rounds=200, time_budget=budget)
-        rnd = RandomStrategy(job, k=8, seed=seed, max_rounds=200, time_budget=budget)
+        kw = {"k": 8, "seed": seed, "max_rounds": 200, "time_budget": budget}
+        lq = LimeQOStrategy(reference_job, **kw)
+        rnd = RandomStrategy(reference_job, **kw)
         lq_finals.append(lq.run()[-1]["total_latency"])
         rnd_finals.append(rnd.run()[-1]["total_latency"])
     lq_mean, rnd_mean = np.mean(lq_finals), np.mean(rnd_finals)
     assert lq_mean <= rnd_mean * 1.05, (lq_finals, rnd_finals)
-    assert lq_mean < job.default_time * 0.9
+    assert lq_mean < reference_job.default_time * 0.9
 
 
-def test_greedy_improves(job):
-    g = GreedyStrategy(job, k=8, seed=5, max_rounds=40, time_budget=300.0)
+def test_greedy_improves(synthetic_job):
+    g = GreedyStrategy(synthetic_job, k=8, seed=5, max_rounds=40, time_budget=300.0)
     rec = g.run()
     assert rec[-1]["total_latency"] < rec[0]["total_latency"]
 
@@ -114,10 +128,10 @@ def test_greedy_rounds_count_successes_not_attempts():
     assert revealed == 8  # ...yet the round still delivered k reveals
 
 
-def test_censoring_accounting(job):
+def test_censoring_accounting(synthetic_job):
     """Timeout-as-censoring: spent time never exceeds revealed + tolerances,
     and censored cells never reveal their value."""
-    lq = LimeQOStrategy(job, k=8, seed=7, max_rounds=10)
+    lq = LimeQOStrategy(synthetic_job, k=8, seed=7, max_rounds=10)
     lq.run()
     st = lq.state
     censored = (st.cutoffs > 0) & (st.mask == 0)
@@ -167,7 +181,7 @@ def test_rank_cells_properties_hypothesis():
     run()
 
 
-def test_bao_baseline_guarded_and_greedy(job):
+def test_bao_baseline_guarded_and_greedy(synthetic_job):
     """Bao-style analog: the guarded variant's deployed policy never
     regresses past default and improves within budget; the literal
     greedy-argmin variant runs (its instability is the documented
@@ -175,24 +189,23 @@ def test_bao_baseline_guarded_and_greedy(job):
     from limeqo_spark.strategies import BaoStrategy
 
     rec = BaoStrategy(
-        job, seed=1, guarded=True, retrain_every=50, time_budget=600.0,
+        synthetic_job, seed=1, guarded=True, retrain_every=50, time_budget=600.0,
     ).run()
     lat = [r["total_latency"] for r in rec]
-    assert all(l <= job.default_time + 1e-6 for l in lat)
-    assert lat[-1] < job.default_time
+    assert all(l <= synthetic_job.default_time + 1e-6 for l in lat)
+    assert lat[-1] < synthetic_job.default_time
     assert rec[-1]["exec_time"] >= 600.0
     rec2 = BaoStrategy(
-        job, seed=1, guarded=False, retrain_every=50, time_budget=120.0,
+        synthetic_job, seed=1, guarded=False, retrain_every=50, time_budget=120.0,
     ).run()
     assert len(rec2) >= 1 and rec2[-1]["explore_queries_cnt"] > 0
 
 
-def test_limeqo_noise_robustness(job):
+def test_limeqo_noise_robustness(synthetic_job):
     """Deployed-on-noisy-observations latency stays bounded and far below
     default under 20% multiplicative measurement noise (the live-cluster
     condition the reference's fixed-matrix sim abstracts away)."""
-    import numpy as np
-
+    job = synthetic_job
     true = job.matrix.copy()
     rng = np.random.default_rng(7)
     # per-PLAN noise (one draw per row-distinct value): per-cell noise
@@ -217,15 +230,14 @@ def test_limeqo_noise_robustness(job):
     assert deployed < 0.75 * job.default_time
 
 
-def test_tcnn_budget_rationality_cap(job):
+def test_tcnn_budget_rationality_cap(synthetic_job):
     """The TCNN explorer must never grant a single measurement more than
     tolerance_budget_frac x max(spent, 300 s) — the r6 SPENT-SCALED cap
     (docs/tcnn_rescue_r5.json design 6 + docs/tcnn_cap_r6.json): tight
     while exploration has spent little, loosening as spend accrues, and
     budget-FREE (unbounded runs are disciplined too). The ALS strategies
     keep the reference's exact guard."""
-    from limeqo_spark.strategies import LimeQOPlusStrategy
-
+    job = synthetic_job
     budget = 90.0
     tcnn = LimeQOPlusStrategy(job, model="tcnn", net_seed=1, time_budget=budget)
     tcnn.pred = np.full(job.matrix.shape, 1e9)  # absurd predictions
@@ -234,7 +246,7 @@ def test_tcnn_budget_rationality_cap(job):
     # (alpha * base) would grant more than the cap there
     base = np.where(job.mask > 0, job.matrix, np.inf).min(axis=1)
     heavy = int(np.argmax(np.where(np.isfinite(base), base, -np.inf)))
-    assert base[heavy] > floor_cap, "fixture sanity: JOB has a heavy row"
+    assert base[heavy] > floor_cap, "fixture sanity: the matrix has a heavy row"
     # fresh run (spent=0): capped at the 300 s floor anchor
     for i in (0, heavy):
         assert tcnn.tolerance(i, 1) <= floor_cap + 1e-9
@@ -251,28 +263,8 @@ def test_tcnn_budget_rationality_cap(job):
     assert free.tolerance(heavy, 1) <= floor_cap + 1e-9
 
 
-def test_ensemble_model_runs_and_respects_batch_contract(job):
-    """The r9 agreement-gated ensemble config (measured NEGATIVE for the
-    CEB mid-checkpoints — docs/ensemble_lab_r9.json — but kept as a
-    documented configuration): fits both models, selects at most k
-    distinct unexplored cells, applies the TCNN spend cap, and completes
-    a budgeted run without error."""
-    from limeqo_spark.strategies import LimeQOPlusStrategy
-
-    s = LimeQOPlusStrategy(
-        job, model="ensemble", net_seed=1, time_budget=30.0, max_rounds=50
-    )
-    rec = s.run()
-    assert len(rec) >= 2
-    assert rec[-1]["total_latency"] <= rec[0]["total_latency"] + 1e-9
-    # selection contract on a fresh fit: k distinct unexplored cells
-    s2 = LimeQOPlusStrategy(job, model="ensemble", net_seed=1)
-    s2.fit()
-    cells = s2.select()
-    assert len(cells) == len(set(cells)) <= s2.k
-    for i, j in cells:
-        assert s2.state.explored[i, j] == 0
-    # the spent-scaled cap applies to the ensemble explorer too
-    s2.pred = __import__("numpy").full(job.matrix.shape, 1e9)
-    floor_cap = s2.tolerance_budget_frac * s2.tolerance_spent_floor
-    assert s2.tolerance(0, 1) <= floor_cap + 1e-9
+@pytest.mark.parametrize("model", ["plan", "ensemble", "bogus"])
+def test_limeqo_plus_rejects_unknown_model(synthetic_job, model):
+    """An unknown cost model is an error, not a silent switch to ALS."""
+    with pytest.raises(ValueError, match="expected one of"):
+        LimeQOPlusStrategy(synthetic_job, model=model)

@@ -10,11 +10,8 @@ from limeqo_spark.workload import Workload
 
 
 @pytest.fixture(scope="module")
-def job():
-    return Workload.from_reference(
-        "/root/reference/dataset/job-matrix.csv",
-        "/root/reference/dataset/init_job_mask.npy",
-    )
+def job(synthetic_job):
+    return synthetic_job
 
 
 @pytest.fixture(scope="module")
